@@ -546,6 +546,11 @@ def main() -> None:
         # re-running.
         "env_load_avg_1m": _ENV_MARKER["load_avg_1m"],
         "env_sibling_jvms": _ENV_MARKER["sibling_jvms"],
+        # the parallelism the run actually had: the local[N] it asked
+        # for and what the SparkContext reports, so a loaded machine
+        # can be told apart from an ignored $SPARK_GRAFT_CPUS
+        "cpus": int(cpus),
+        "default_parallelism": spark.sparkContext.defaultParallelism,
     }
     print(json.dumps(result))
     # Durable copy: the driver captures only the stdout TAIL (~2000

@@ -130,7 +130,7 @@ def _run(fn) -> int:
         return e.exit_code
     except Exception as e:
         # errors raised inside executor tasks (e.g. a failed FTP login in
-        # list_tree's mapPartitions) cross Py4J as untyped strings; map
+        # an action sink's partition) cross Py4J as untyped strings; map
         # them back so bad credentials still exit 3, not 1
         from ..errors import typed_from_message
 

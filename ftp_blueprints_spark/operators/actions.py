@@ -2,10 +2,12 @@
 D1-D3) as ``foreachPartition`` sinks over a destination-projected
 manifest (columns ``path`` and, where applicable, ``dest_path``).
 
-Execution model: the manifest is repartitioned to
-``spec.max_connections`` (FTP servers throttle sessions), each
-partition opens ONE client (connector.ClientSpec.connect) and streams
-its rows; bytes flow executor<->server and never touch the driver.
+Execution model: the manifest is repartitioned to exactly
+``spec.max_connections`` partitions (FTP servers throttle sessions, and
+the budget is also the parallelism a sink should use), each partition
+opens ONE client (connector.ClientSpec.connect) on its first row and
+streams its rows; a partition with no rows never logs in. Bytes flow
+executor<->server and never touch the driver.
 
 Reference error-semantic asymmetries preserved (behavioral parity):
 - download skips failed rows and keeps going, removing the partial
@@ -25,34 +27,56 @@ Reference error-semantic asymmetries preserved (behavioral parity):
 
 from __future__ import annotations
 
+import logging
 import os
-import sys
+from contextlib import closing
 
 from pyspark.sql import DataFrame
 
 from ..errors import InvalidFilePath, MoveError, UploadError, typed_from_message
 from ..sources.connector import ClientSpec
 
+log = logging.getLogger("ftp_blueprints_spark")
+
 
 def _progress(action: str, n_ok: int, n_other: int = 0, other: str = "") -> None:
     """D4 progress logging (the reference prints per-file lines,
-    download_file.py:197,268,276; here one line per partition so logs
+    download_file.py:197,268,276; here one record per partition so logs
     stay bounded at scale)."""
     extra = f", {n_other} {other}" if other else ""
-    print(f"[{action}] partition done: {n_ok} ok{extra}", file=sys.stderr)
+    log.info("[%s] partition done: %d ok%s", action, n_ok, extra)
 
 
 def _bounded(df: DataFrame, spec: ClientSpec) -> DataFrame:
-    """Bound sink fan-out by the connection budget."""
-    n = max(1, spec.max_connections)
-    return df.repartition(n) if df.rdd.getNumPartitions() > n else df
+    """Spread the sink over exactly ``max_connections`` partitions, one
+    session each: the budget bounds the fan-out AND is the parallelism
+    the sink runs at. ``repartition(n)`` is a REPARTITION_BY_NUM shuffle,
+    which AQE never coalesces, so a one-partition manifest still fans
+    out to every session."""
+    return df.repartition(max(1, spec.max_connections))
+
+
+def _connected(spec: ClientSpec, rows):
+    """Yield ``(client, row)`` per row over ONE client that connects on
+    the first row, so an empty partition never logs in. The connect
+    happens outside the sinks' per-row error handling: a login failure
+    aborts the partition (exit 3), it is never a skipped row."""
+    client = None
+    try:
+        for row in rows:
+            if client is None:
+                client = spec.connect()
+            yield client, row
+    finally:
+        if client is not None:
+            client.close()
 
 
 def _rethrow_typed(err: Exception) -> None:
     """Executor exceptions surface as Py4J strings; map back to the
     typed error (and its exit code) at the driver boundary. Covers
-    IncorrectCredentials too: spec.connect() runs INSIDE partitions, so
-    a bad login fails executor-side and must still exit 3."""
+    IncorrectCredentials too: a sink's spec.connect() runs INSIDE its
+    partition, so a bad login fails executor-side and must still exit 3."""
     typed = typed_from_message(err)
     if typed is not None:
         raise typed from err
@@ -69,10 +93,9 @@ def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
     ok, failed = sc.accumulator(0), sc.accumulator(0)
 
     def sink(rows) -> None:
-        client = spec.connect()
         n_ok = n_failed = 0
-        try:
-            for row in rows:
+        with closing(_connected(spec, rows)) as pairs:
+            for client, row in pairs:
                 dest = os.path.join(dest_root, row["dest_path"])
                 os.makedirs(os.path.dirname(dest) or ".", exist_ok=True)
                 tmp = f"{dest}.inprogress"
@@ -87,9 +110,7 @@ def download(manifest: DataFrame, spec: ClientSpec, dest_root: str) -> dict:
                         os.remove(tmp)
                     n_failed += 1
                     failed.add(1)  # D1: skip and continue
-            _progress("download", n_ok, n_failed, "failed")
-        finally:
-            client.close()
+        _progress("download", n_ok, n_failed, "failed")
 
     try:
         # per-ROW failures are skipped inside the sink (D1), but a
@@ -110,11 +131,10 @@ def upload(manifest: DataFrame, spec: ClientSpec, source_root: str = "") -> dict
     ok, skipped = sc.accumulator(0), sc.accumulator(0)
 
     def sink(rows) -> None:
-        client = spec.connect()
         made: set[str] = set()  # one mkdir -p per folder per partition,
         n_ok = n_skip = 0  # not per row (control-channel round-trips)
-        try:
-            for row in rows:
+        with closing(_connected(spec, rows)) as pairs:
+            for client, row in pairs:
                 src = os.path.join(source_root, row["path"]) if source_root else row["path"]
                 if not os.path.isfile(src):
                     n_skip += 1
@@ -131,9 +151,7 @@ def upload(manifest: DataFrame, spec: ClientSpec, source_root: str = "") -> dict
                     ok.add(1)
                 except Exception as e:
                     raise UploadError(f"failed to upload {src}: {e}") from e
-            _progress("upload", n_ok, n_skip, "skipped")
-        finally:
-            client.close()
+        _progress("upload", n_ok, n_skip, "skipped")
 
     try:
         _bounded(manifest.select("path", "dest_path"), spec).foreachPartition(sink)
@@ -149,11 +167,10 @@ def move(manifest: DataFrame, spec: ClientSpec) -> dict:
     ok = sc.accumulator(0)
 
     def sink(rows) -> None:
-        client = spec.connect()
         made: set[str] = set()  # memoized like the upload sink
         n_ok = 0
-        try:
-            for row in rows:
+        with closing(_connected(spec, rows)) as pairs:
+            for client, row in pairs:
                 folder = row["dest_path"].rsplit("/", 1)[0] if "/" in row["dest_path"] else ""
                 try:
                     if folder and folder not in made:
@@ -164,9 +181,7 @@ def move(manifest: DataFrame, spec: ClientSpec) -> dict:
                     ok.add(1)
                 except Exception as e:
                     raise MoveError(f"failed to move {row['path']}: {e}") from e
-            _progress("move", n_ok)
-        finally:
-            client.close()
+        _progress("move", n_ok)
 
     try:
         _bounded(manifest.select("path", "dest_path"), spec).foreachPartition(sink)
@@ -182,19 +197,16 @@ def delete(manifest: DataFrame, spec: ClientSpec) -> dict:
     ok = sc.accumulator(0)
 
     def sink(rows) -> None:
-        client = spec.connect()
         n_ok = 0
-        try:
-            for row in rows:
+        with closing(_connected(spec, rows)) as pairs:
+            for client, row in pairs:
                 try:
                     client.delete(row["path"])
                     n_ok += 1
                     ok.add(1)
                 except Exception as e:
                     raise InvalidFilePath(f"failed to delete {row['path']}: {e}") from e
-            _progress("delete", n_ok)
-        finally:
-            client.close()
+        _progress("delete", n_ok)
 
     try:
         _bounded(manifest.select("path"), spec).foreachPartition(sink)

@@ -127,6 +127,12 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
     numbering job could place boundary rows in different partitions
     than the counts saw — duplicate and skipped file_numbers, i.e.
     silently colliding destination paths."""
+    return _numbered(matches)[0]
+
+
+def _numbered(matches: DataFrame) -> tuple[DataFrame, int]:
+    """:func:`with_file_numbers` plus the total match count, which the
+    per-partition counts already give on the driver for free."""
     ranged = (
         matches.repartitionByRange("path")
         .withColumn("_pid", F.spark_partition_id())
@@ -142,7 +148,7 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
         [(pid, off) for pid, off in offsets.items()], "_pid int, _offset bigint"
     )
     w = Window.partitionBy("_pid").orderBy("path")
-    return (
+    numbered = (
         ranged.withColumn("_local_rn", F.row_number().over(w))
         .join(F.broadcast(offsets_df), "_pid")
         .withColumn(
@@ -150,6 +156,7 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
         )
         .drop("_pid", "_local_rn", "_offset")
     )
+    return numbered, acc
 
 
 def with_destination(
@@ -166,10 +173,12 @@ def with_destination(
 
     Without a destination_file_name every row keeps its source basename
     and the enumeration is provably unused, so the numbering pass (a
-    range shuffle + counts job) and the match-count cross-join are
-    skipped entirely — the common download/move-keeping-names case pays
-    zero extra jobs. file_number is still emitted (as NULL) so the
-    output schema does not depend on the parameter."""
+    range shuffle + counts job) is skipped entirely — the common
+    download/move-keeping-names case pays zero extra jobs. file_number
+    is still emitted (as NULL) so the output schema does not depend on
+    the parameter. The match count ``suppress_single`` needs is the
+    numbering pass's own driver-side total: no aggregate or join runs
+    for it."""
     if destination_file_name is None:
         dest = P.determine_destination_name(
             P.clean_folder_name(F.lit(destination_folder_name)),
@@ -180,24 +189,15 @@ def with_destination(
         return matches.withColumn(
             "file_number", F.lit(None).cast("int")
         ).withColumn("dest_path", dest)
-    numbered = with_file_numbers(matches)
-    # total match count via agg + broadcast cross-join (1 row), not a
-    # global window — no single-task stage at any scale
-    n_df = numbered.agg(F.count("*").alias("n_matches"))
-    numbered = numbered.crossJoin(F.broadcast(n_df))
-    if suppress_single:
-        file_number = F.when(
-            F.col("n_matches") > 1, F.col("file_number")
-        ).otherwise(F.lit(None))
-    else:
-        file_number = F.col("file_number")
+    numbered, n_matches = _numbered(matches)
+    single = suppress_single and n_matches == 1
     dest = P.determine_destination_name(
         P.clean_folder_name(F.lit(destination_folder_name)),
-        F.lit(destination_file_name) if destination_file_name is not None else None,
+        F.lit(destination_file_name),
         F.col("path"),
-        file_number,
+        None if single else F.col("file_number"),
     )
-    return numbered.withColumn("dest_path", dest).drop("n_matches")
+    return numbered.withColumn("dest_path", dest)
 
 
 def require_matches(matches: DataFrame) -> DataFrame:

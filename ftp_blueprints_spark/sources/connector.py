@@ -5,8 +5,9 @@ stateful (pwd/cwd) and unshareable across executors. The engine
 therefore talks to remote trees through a small picklable interface:
 
 - :class:`ClientSpec` — a picklable *description* of a connection
-  (host/port/credentials/policy). Shipped to executors; each partition
-  opens its own client (``spec.connect()``) and closes it when done.
+  (host/port/credentials/policy). Shipped to executors, where each
+  sink partition opens its own client (``spec.connect()``) and closes
+  it when done; the driver-side listing pool opens one per thread.
 - :class:`RemoteClient` — the operation surface the sinks and listing
   source consume: ``listdir / retrieve / store / rename / delete /
   makedirs``.
@@ -19,10 +20,14 @@ therefore talks to remote trees through a small picklable interface:
   passive; delete_file.py:89-104 sets timeout=3600 + passive;
   upload/move set neither).
 
-Scale design: sinks call ``spec.connect()`` once per PARTITION (not per
-row), and action DataFrames are repartitioned to ``max_connections``
-before ``foreachPartition`` so a 1000-executor job cannot open more
-sessions than the server allows.
+Scale design: ``max_connections`` is both the session limit and the
+parallelism. Action DataFrames are repartitioned to exactly
+``max_connections`` partitions before ``foreachPartition``, and each
+partition calls ``spec.connect()`` once, on its first row (never per
+row, never for an empty partition), so a 1000-executor job cannot open
+more sessions than the server allows. ``list_tree`` walks on a
+driver-side pool of ``max_connections`` threads, one client each,
+reused across every BFS level.
 """
 
 from __future__ import annotations
@@ -170,15 +175,29 @@ class FTPClient(RemoteClient):
         self._ftp.delete(path)
 
     def makedirs(self, folder: str) -> None:
+        import ftplib
+
         original = self._ftp.pwd()
         for seg in folder.split("/"):
             if not seg:
                 continue
             try:
                 self._ftp.cwd(seg)
-            except Exception:
+                continue
+            except ftplib.error_perm:
+                pass
+            try:
                 self._ftp.mkd(seg)
-                self._ftp.cwd(seg)
+            except ftplib.error_perm as e:
+                # sink partitions share parent folders: another session
+                # may have made this one since the cwd probe. Only a
+                # folder that still cannot be entered is a failure.
+                try:
+                    self._ftp.cwd(seg)
+                except ftplib.error_perm:
+                    raise e from None
+                continue
+            self._ftp.cwd(seg)
         self._ftp.cwd(original)
 
     def close(self) -> None:
@@ -232,7 +251,9 @@ def is_missing_folder_error(exc: BaseException) -> bool:
 
 @dataclass
 class ClientSpec:
-    """Picklable connection description; one ``connect()`` per partition.
+    """Picklable connection description; one ``connect()`` per sink
+    partition or listing-pool thread, at most ``max_connections`` open
+    at once.
 
     ``kind='local'`` needs only ``root``; ``kind='ftp'`` uses
     host/port/credentials plus the unified timeout/passive policy."""

@@ -6,14 +6,14 @@ DataFrame (SURVEY.md §2A S2-S5).
 The reference walks the tree sequentially — BFS queue in
 download_file.py:252-257 / delete_file.py:121-126, recursive DFS in
 move_file.py:63-78 — paying >=1 network round-trip per directory entry
-on one connection. Here each BFS *level* is expanded in parallel:
-the current frontier of folders is parallelized across partitions and
-each partition lists its folders with its own client
-(``mapPartitions`` + per-partition ``spec.connect()``). Wall-clock per
-level is max(folder listing) instead of sum, and the fan-out is
-bounded by ``spec.max_connections`` so a wide tree cannot exceed the
-server's session limit. Level results accumulate driver-side as plain
-rows ONLY while the tree is small: past ``driver_rows_threshold``
+on one connection. Here each BFS *level* is expanded in parallel on
+the driver: a ``ThreadPoolExecutor`` of ``spec.max_connections``
+threads lists the frontier's folders, each thread holding ONE client
+that it reuses for every level of the walk. Wall-clock per level is
+max(folder listing) instead of sum, no Spark job runs, the walk logs
+in at most ``max_connections`` times, and the fan-out can never exceed
+the server's session limit. Level results accumulate driver-side as
+plain rows ONLY while the tree is small: past ``driver_rows_threshold``
 entries the walk abandons driver accumulation and returns the
 ``ftp_manifest`` DataSource DataFrame instead (datasource.py), whose
 per-top-level-entry partitions are walked executor-side — driver
@@ -28,11 +28,14 @@ column when only metadata is selected.
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import ThreadPoolExecutor
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import paths as P
-from .connector import ClientSpec, is_missing_folder_error
+from .connector import ClientSpec, RemoteClient, is_missing_folder_error
 
 MANIFEST_SCHEMA = "path string, folder string, name string, is_dir boolean, size bigint"
 
@@ -173,18 +176,37 @@ def _datasource_tree(
     )
 
 
-def _list_level(spec: ClientSpec, folders: list[str]) -> list[tuple]:
-    """List one frontier of folders with a single client (executor-side)."""
-    client = spec.connect()
-    try:
-        rows = []
-        for folder in folders:
-            for path, is_dir, size in client.listdir(folder):
-                name = path.rsplit("/", 1)[-1]
-                rows.append((path, folder, name, is_dir, size))
-        return rows
-    finally:
-        client.close()
+class _SessionPool:
+    """``spec.max_connections`` driver-side listing threads. Each thread
+    opens ONE client on its first folder and keeps it for the whole
+    walk, so a walk logs in at most ``max_connections`` times however
+    many levels it has."""
+
+    def __init__(self, spec: ClientSpec):
+        self._spec = spec
+        self._local = threading.local()
+        self._clients: list[RemoteClient] = []
+        self._threads = ThreadPoolExecutor(max(1, spec.max_connections))
+
+    def _listdir(self, folder: str) -> list[tuple]:
+        client = getattr(self._local, "client", None)
+        if client is None:
+            client = self._local.client = self._spec.connect()
+            self._clients.append(client)  # read only after shutdown joins
+        return client.listdir(folder)
+
+    def listdirs(self, folders: list[str]) -> list[list[tuple]]:
+        """``listdir`` of every folder in parallel, in ``folders`` order;
+        the first failure propagates with its original type."""
+        return list(self._threads.map(self._listdir, folders))
+
+    def __enter__(self) -> "_SessionPool":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._threads.shutdown(cancel_futures=True)
+        for client in self._clients:
+            client.close()
 
 
 def list_tree(
@@ -217,7 +239,6 @@ def list_tree(
     executor-partitioned DataSource (the partial BFS work is discarded —
     crossing the threshold means the tree is big enough that a clean
     distributed walk beats finishing a driver-side one)."""
-    sc = spark.sparkContext
     seed = root
     if path_pattern:
         seed = seed_for(root, pattern_prefix(path_pattern))
@@ -225,51 +246,35 @@ def list_tree(
             return spark.createDataFrame([], MANIFEST_SCHEMA)
     frontier = [seed]
     all_rows: list[tuple] = []
-    if seed != root:
-        # pruned entry: one driver-side listing doubles as the seed
-        # probe — a prefix folder that doesn't exist is simply a tree
-        # with no matches, not an error (the full walk would never
-        # visit it and report zero matches). ONLY missing-folder
-        # errors soften (is_missing_folder_error inspects the 550
-        # reply text so permission-denied propagates); transient
-        # failures (timeouts, 421s) surface exactly as they would
-        # mid-walk.
-        client = spec.connect()
-        try:
+    with _SessionPool(spec) as pool:
+        # a pruned walk's first level is the seed probe, on top of max_depth
+        for depth in range(max_depth + (seed != root)):
+            if not frontier:
+                break
+            if len(all_rows) > driver_rows_threshold:
+                return _datasource_tree(spark, spec, seed, skip_dot_dirs)
             try:
-                level0 = client.listdir(seed)
+                listings = pool.listdirs(frontier)
             except Exception as e:
-                if not is_missing_folder_error(e):
+                # pruned entry: a prefix folder that doesn't exist is
+                # simply a tree with no matches, not an error (the full
+                # walk would never visit it and report zero matches).
+                # ONLY missing-folder errors soften (is_missing_folder_error
+                # inspects the 550 reply text so permission-denied
+                # propagates); transient failures (timeouts, 421s)
+                # surface exactly as they would mid-walk.
+                if depth or seed == root or not is_missing_folder_error(e):
                     raise
                 return spark.createDataFrame([], MANIFEST_SCHEMA)
-        finally:
-            client.close()
-        frontier = []
-        for path, is_dir, size in level0:
-            name = path.rsplit("/", 1)[-1]
-            if skip_dot_dirs and set(name) == {"."}:
-                continue
-            all_rows.append((path, seed, name, is_dir, size))
-            if is_dir:
-                frontier.append(path)
-    for _ in range(max_depth):
-        if not frontier:
-            break
-        if len(all_rows) > driver_rows_threshold:
-            return _datasource_tree(spark, spec, seed, skip_dot_dirs)
-        n_parts = max(1, min(len(frontier), spec.max_connections))
-        level = (
-            sc.parallelize(frontier, n_parts)
-            .mapPartitions(lambda it, s=spec: _list_level(s, list(it)))
-            .collect()
-        )
-        frontier = []
-        for path, folder, name, is_dir, size in level:
-            if skip_dot_dirs and set(name) == {"."}:
-                continue  # F4 (download_file.py:58-62)
-            all_rows.append((path, folder, name, is_dir, size))
-            if is_dir:
-                frontier.append(path)
+            parents, frontier = frontier, []
+            for folder, entries in zip(parents, listings):
+                for path, is_dir, size in entries:
+                    name = path.rsplit("/", 1)[-1]
+                    if skip_dot_dirs and set(name) == {"."}:
+                        continue  # F4 (download_file.py:58-62)
+                    all_rows.append((path, folder, name, is_dir, size))
+                    if is_dir:
+                        frontier.append(path)
     return spark.createDataFrame(all_rows, MANIFEST_SCHEMA)
 
 

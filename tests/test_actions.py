@@ -207,6 +207,24 @@ def test_move_single_match_suppresses_numbering(spark, tree):
     assert not (tree / "archive/renamed_1.csv").exists()
 
 
+def test_numbered_destination_plan_has_no_cross_join(spark, tree):
+    """Numbering needs no match-count join: with a destination name the
+    plan holds no cartesian or nested-loop join, with or without
+    suppress_single, and the fan-out numbers still follow path order."""
+    mf = list_tree(spark, _spec(tree), "reports")
+    matched = match_files(mf, pattern="[.]csv$")
+    for suppress_single in (False, True):
+        out = with_destination(matched, "out", "x.csv", suppress_single=suppress_single)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "CartesianProduct" not in plan
+        assert "NestedLoopJoin" not in plan
+        assert sorted((r["path"], r["dest_path"]) for r in out.collect()) == [
+            ("reports/2024/feb.csv", "out/x_1.csv"),
+            ("reports/2024/jan.csv", "out/x_2.csv"),
+            ("reports/summary.csv", "out/x_3.csv"),
+        ]
+
+
 def test_move_fail_fast(spark, tree):
     """D2: first rename failure aborts with exit-202 semantics."""
     spec = _spec(tree)

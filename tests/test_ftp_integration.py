@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import io
 import os
+import threading
 
 import pytest
 
@@ -23,7 +24,7 @@ from ftp_blueprints_spark.operators import actions
 from ftp_blueprints_spark.sources.connector import ClientSpec
 from ftp_blueprints_spark.sources.listing import list_tree
 
-from .ftp_stub_server import FtpStubServer
+from .ftp_stub_server import FtpStubServer, _Session
 
 USERS = {"alice": "secret"}
 
@@ -50,6 +51,51 @@ def spec_for(host: str, port: int, **kw) -> ClientSpec:
         kind="ftp", host=host, port=port, username="alice", password="secret",
         timeout=10, max_connections=4, **kw,
     )
+
+
+class _CountingSession(_Session):
+    def run(self) -> None:
+        self.server.session_started()
+        try:
+            super().run()
+        finally:
+            self.server.session_ended()
+
+    def send(self, code: int, text: str) -> None:
+        if code == 230:
+            self.server.count_login()
+        super().send(code, text)
+
+
+class CountingFtpServer(FtpStubServer):
+    """Stub server that counts successful logins and the peak number of
+    concurrent control sessions."""
+
+    def __init__(self, *args, **kw):
+        super().__init__(*args, **kw)
+        self._lock = threading.Lock()
+        self.logins = self.active = self.peak = 0
+
+    def _accept_loop(self) -> None:
+        while True:
+            try:
+                conn, _ = self._listener.accept()
+            except OSError:
+                return  # listener closed
+            _CountingSession(conn, self).start()
+
+    def count_login(self) -> None:
+        with self._lock:
+            self.logins += 1
+
+    def session_started(self) -> None:
+        with self._lock:
+            self.active += 1
+            self.peak = max(self.peak, self.active)
+
+    def session_ended(self) -> None:
+        with self._lock:
+            self.active -= 1
 
 
 # --- S1: session open -------------------------------------------------------
@@ -90,6 +136,39 @@ def test_list_tree_over_ftp(spark, ftp_root):
     assert rows["data/sub/c.txt"]["size"] == len(TREE["data/sub/c.txt"])
     # dot-dir pruned during traversal (F4), so its children never appear
     assert not any("hidden" in p for p in rows)
+
+
+def test_list_tree_pool_walk_runs_no_jobs(spark, tmp_path):
+    """The BFS walks on a driver-side session pool: no Spark job runs,
+    the walk logs in at most max_connections times across all levels,
+    and its rows come back in the order of a sequential BFS over the
+    same tree (frontier order, then listing order)."""
+    from ftp_blueprints_spark.sources.connector import LocalFSClient
+
+    for rel in ("l1a/l2a/l3a/f1.csv", "l1a/l2a/f2.csv", "l1a/l2b/l3b/f3.txt",
+                "l1b/f4.csv", "l1b/l2c/l3c/f5.bin", "l1b/l2c/f6.csv", "top.csv"):
+        p = tmp_path / rel
+        p.parent.mkdir(parents=True, exist_ok=True)
+        p.write_bytes(rel.encode())
+    local, expected, frontier = LocalFSClient(str(tmp_path)), [], [""]
+    while frontier:
+        folder = frontier.pop(0)
+        for path, is_dir, size in local.listdir(folder):
+            expected.append((path, folder, path.rsplit("/", 1)[-1], is_dir, size))
+            if is_dir:
+                frontier.append(path)
+
+    sc = spark.sparkContext
+    srv = CountingFtpServer(str(tmp_path), USERS)
+    with srv as (host, port):
+        sc.setJobGroup("list-tree-pool", "list_tree over the stub")
+        try:
+            mf = list_tree(spark, spec_for(host, port), "")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("list-tree-pool") == []
+        assert 1 <= srv.logins <= 4
+    assert [tuple(r) for r in mf.collect()] == expected
 
 
 # --- DataSource over FTP ----------------------------------------------------
@@ -202,6 +281,48 @@ def test_delete_removes_files_fail_fast_exit201(spark, ftp_root):
         assert ei.value.exit_code == 201
 
 
+@pytest.mark.parametrize("n_files", [1, 9])
+@pytest.mark.parametrize("action", ["download", "upload", "move", "delete"])
+def test_sinks_fan_out_over_the_connection_budget(spark, tmp_path, action, n_files):
+    """Every sink spreads over exactly max_connections partitions and
+    logs in once per partition that has rows: a one-partition manifest
+    of 9 files uses all 4 sessions, a single file logs in once."""
+    srv_root = tmp_path / "srv"
+    src = tmp_path / "local" if action == "upload" else srv_root / "in"
+    src.mkdir(parents=True)
+    srv_root.mkdir(exist_ok=True)
+    names = [f"f{i}.bin" for i in range(n_files)]
+    payload = {n: f"payload of {n}".encode() * 50 for n in names}
+    for n in names:
+        (src / n).write_bytes(payload[n])
+    sources = [str(src / n) if action == "upload" else f"in/{n}" for n in names]
+    # one input partition, like the AQE-coalesced manifest the CLI builds
+    manifest = spark.createDataFrame(
+        [(path, f"out/{n}") for path, n in zip(sources, names)],
+        "path string, dest_path string",
+    ).coalesce(1)
+    srv = CountingFtpServer(str(srv_root), USERS)
+    with srv as (host, port):
+        spec = spec_for(host, port)
+        out = srv_root / "out"
+        if action == "download":
+            out = tmp_path / "dl" / "out"
+            result = actions.download(manifest, spec, str(tmp_path / "dl"))
+            assert result == {"ok": n_files, "failed": 0}
+        elif action == "upload":
+            assert actions.upload(manifest, spec) == {"ok": n_files, "skipped": 0}
+        elif action == "move":
+            assert actions.move(manifest, spec) == {"ok": n_files}
+        else:
+            assert actions.delete(manifest.select("path"), spec) == {"ok": n_files}
+    if action == "delete":
+        assert not list(src.iterdir())
+    else:
+        assert {n: (out / n).read_bytes() for n in names} == payload
+    assert srv.logins == min(n_files, 4)
+    assert srv.peak <= 4
+
+
 # --- raw client round-trip --------------------------------------------------
 
 def test_client_store_retrieve_roundtrip(ftp_root):
@@ -215,6 +336,40 @@ def test_client_store_retrieve_roundtrip(ftp_root):
         finally:
             client.close()
     assert out.getvalue() == b"payload"
+
+
+def test_makedirs_tolerates_a_concurrent_mkd(ftp_root):
+    """Two sink partitions can both miss a shared parent folder on their
+    cwd probe; the one whose MKD then loses the race ('550 already
+    exists') must enter the folder, not fail the upload. A folder that
+    cannot be made or entered still raises the MKD error."""
+    import ftplib
+
+    with FtpStubServer(ftp_root, USERS) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            os.makedirs(os.path.join(ftp_root, "race"))  # the other session won
+            real_cwd, probes = client._ftp.cwd, []
+
+            def stale_probe(seg):
+                if seg == "race" and not probes:
+                    probes.append(seg)  # the probe ran before the other MKD
+                    raise ftplib.error_perm("550 not a directory")
+                return real_cwd(seg)
+
+            client._ftp.cwd = stale_probe
+            client.makedirs("race/deeper")
+            assert probes == ["race"]
+            assert os.path.isdir(os.path.join(ftp_root, "race", "deeper"))
+        finally:
+            client.close()
+    with FtpStubServer(ftp_root, USERS, readonly=True) as (host, port):
+        client = spec_for(host, port).connect()
+        try:
+            with pytest.raises(ftplib.error_perm, match="read-only"):
+                client.makedirs("nope")
+        finally:
+            client.close()
 
 
 # --- CSV-over-FTP ingestion to parquet --------------------------------------
