@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..errors import NoMatchesFound  # noqa: F401  (re-export: F7 guard, exit 200)
 from ..functions import paths as P
-from ..session import load_table, local_checkpoint
+from ..session import load_table, local_checkpoint, local_frame
 
 MANIFEST_COLUMNS = ("path", "folder", "name", "is_dir", "size")
 
@@ -75,7 +75,8 @@ def build_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("is_dir"),
         F.lit(None).cast("bigint").alias("size"),
     )
-    dots = spark.createDataFrame(
+    dots = local_frame(
+        spark,
         [(f"data/{d}", "data", d, True, None) for d in (".", "..", "...")],
         "path string, folder string, name string, is_dir boolean, size bigint",
     )
@@ -115,7 +116,7 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
        window — parallel);
     2. count rows per partition (tiny: one row per partition), turn
        the counts into cumulative offsets driver-side, and add each
-       partition's offset via a broadcast join.
+       partition's offset as a literal looked up by partition id.
 
     Equivalent to ``row_number() OVER (ORDER BY path)`` but no stage
     ever funnels all matches through a single task — a pattern that
@@ -132,30 +133,26 @@ def with_file_numbers(matches: DataFrame) -> DataFrame:
 
 def _numbered(matches: DataFrame) -> tuple[DataFrame, int]:
     """:func:`with_file_numbers` plus the total match count, which the
-    per-partition counts already give on the driver for free."""
+    per-partition counts already give on the driver for free. Each
+    partition's offset is a plan literal picked by ``_pid``, so adding
+    it needs no join."""
     ranged = (
         matches.repartitionByRange("path")
         .withColumn("_pid", F.spark_partition_id())
         .transform(local_checkpoint)
     )
-    counts = ranged.groupBy("_pid").count().collect()
-    offsets, acc = {}, 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    spark = matches.sparkSession
-    offsets_df = spark.createDataFrame(
-        [(pid, off) for pid, off in offsets.items()], "_pid int, _offset bigint"
+    counts = dict(ranged.groupBy("_pid").count().collect())
+    offsets, acc = [], 0
+    for pid in range(max(counts, default=-1) + 1):  # a missing pid counts 0
+        offsets.append(acc)
+        acc += counts.get(pid, 0)
+    offset = F.element_at(
+        F.array(*map(F.lit, offsets)).cast("array<bigint>"), F.col("_pid") + 1
     )
     w = Window.partitionBy("_pid").orderBy("path")
-    numbered = (
-        ranged.withColumn("_local_rn", F.row_number().over(w))
-        .join(F.broadcast(offsets_df), "_pid")
-        .withColumn(
-            "file_number", (F.col("_offset") + F.col("_local_rn")).cast("int")
-        )
-        .drop("_pid", "_local_rn", "_offset")
-    )
+    numbered = ranged.withColumn(
+        "file_number", (offset + F.row_number().over(w)).cast("int")
+    ).drop("_pid")
     return numbered, acc
 
 
@@ -202,6 +199,6 @@ def with_destination(
 
 def require_matches(matches: DataFrame) -> DataFrame:
     """F7 guard: raise NoMatchesFound (exit 200) when nothing matched."""
-    if matches.limit(1).count() == 0:
+    if matches.isEmpty():
         raise NoMatchesFound("no files matched the provided pattern")
     return matches

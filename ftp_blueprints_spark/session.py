@@ -109,6 +109,28 @@ def local_checkpoint(df, eager: bool = True):
     return df.localCheckpoint(eager=eager)
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], ddl_schema: str):
+    """DataFrame over driver-held row tuples as a JVM ``LocalRelation``:
+    unlike ``createDataFrame(list)`` (a Python-backed RDD), no scan of it
+    starts a Python worker per task.
+
+    Columns are built as exact Arrow arrays of the DDL's types — not via
+    pandas, which turns a nullable int column into float64 — so nulls,
+    non-ASCII strings and bigints above 2^53 round-trip unchanged."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(ddl_schema)
+    arrow = to_arrow_schema(struct)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def normalize_timestamps(df):
     """Coerce every timestamp-typed column to session-zoned TIMESTAMP.
 

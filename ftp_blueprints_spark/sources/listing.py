@@ -13,7 +13,9 @@ that it reuses for every level of the walk. Wall-clock per level is
 max(folder listing) instead of sum, no Spark job runs, the walk logs
 in at most ``max_connections`` times, and the fan-out can never exceed
 the server's session limit. Level results accumulate driver-side as
-plain rows ONLY while the tree is small: past ``driver_rows_threshold``
+row tuples ONLY while the tree is small, and become the manifest as an
+Arrow-built JVM ``LocalRelation`` (``session.local_frame``), so no
+later scan of it starts a Python worker. Past ``driver_rows_threshold``
 entries the walk abandons driver accumulation and returns the
 ``ftp_manifest`` DataSource DataFrame instead (datasource.py), whose
 per-top-level-entry partitions are walked executor-side — driver
@@ -35,6 +37,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import paths as P
+from ..session import local_frame
 from .connector import ClientSpec, RemoteClient, is_missing_folder_error
 
 MANIFEST_SCHEMA = "path string, folder string, name string, is_dir boolean, size bigint"
@@ -243,7 +246,7 @@ def list_tree(
     if path_pattern:
         seed = seed_for(root, pattern_prefix(path_pattern))
         if seed is None:  # literals diverge: nothing under root matches
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return local_frame(spark, [], MANIFEST_SCHEMA)
     frontier = [seed]
     all_rows: list[tuple] = []
     with _SessionPool(spec) as pool:
@@ -265,7 +268,7 @@ def list_tree(
                 # surface exactly as they would mid-walk.
                 if depth or seed == root or not is_missing_folder_error(e):
                     raise
-                return spark.createDataFrame([], MANIFEST_SCHEMA)
+                return local_frame(spark, [], MANIFEST_SCHEMA)
             parents, frontier = frontier, []
             for folder, entries in zip(parents, listings):
                 for path, is_dir, size in entries:
@@ -275,7 +278,7 @@ def list_tree(
                     all_rows.append((path, folder, name, is_dir, size))
                     if is_dir:
                         frontier.append(path)
-    return spark.createDataFrame(all_rows, MANIFEST_SCHEMA)
+    return local_frame(spark, all_rows, MANIFEST_SCHEMA)
 
 
 def binary_manifest(
